@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import HASH_PRIME, affine_hashes, md5_long
 from ..functions.detmath import exact_round_div, int_div
-from ..functions.scale import fan_out
 from ..functions.textnorm import WS_REGEX, ascii_lower
 from .text import ws_tokens
 
@@ -79,16 +78,9 @@ def shingle_strings(docs: DataFrame, text_col: str = "text",
     once per shingle index — O(tokens^2) regex work per document.
     CollapseProject leaves the projection alone (non-cheap expression
     referenced more than once), so tokenization runs once per row.
-
-    The input is fanned out first (functions/scale.fan_out): the
-    tokenize + per-shingle md5 work is the dominant per-row cost of
-    every consumer, and on a one-split fixture scan it would otherwise
-    run as a single task (no-op at real scale, where the scan is
-    already wide).
     """
-    toked = fan_out(docs.select("doc_id", *carry_cols, text_col)) \
-        .select("doc_id", *carry_cols,
-                ws_tokens(F.col(text_col)).alias("_toks"))
+    toked = docs.select("doc_id", *carry_cols,
+                        ws_tokens(F.col(text_col)).alias("_toks"))
     toks = F.col("_toks")
     sh = F.when(
         F.size(toks) >= n,
@@ -192,8 +184,7 @@ def lsh_candidate_pairs(sketch: DataFrame) -> DataFrame:
 
 
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", *,
-                      n: int = 3, threshold: float = 0.4,
-                      reuse_sets: bool = False) -> DataFrame:
+                      n: int = 3, threshold: float = 0.4) -> DataFrame:
     """MinHash-LSH near-duplicate pairs, exact-Jaccard verified.
 
     band bucket = concat of the band's min-hashes; candidates are pairs
@@ -201,26 +192,15 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", *,
     shingle-hash set and computes exact Jaccard.
 
     The sketch aggregate (hset + signatures in one pass) feeds four plan
-    subtrees (two self-join sides twice).  It is localCheckpointed (r12)
-    so the shingle scan + sketch aggregation run ONCE: the r3-era
-    recompute-vs-persist measurement (recompute 2.38-2.84 s vs persist
-    2.71-2.87 s at sf0.1 — concurrent recompute won because all four
-    subtrees were SINGLE-TASK scan stages filling idle cores) inverted
-    once shingle_strings fanned the scan out across the machine: with
-    the wide tokenize stage one materialization replaces four recomputes
-    at parity standalone, and — the real point — gives the composed
-    consumers (the agreement/detector/cluster family) a materialized leg
-    they can build CONCURRENTLY with the other leg (scale.par_build;
-    per-query before/after in OPTIMIZATION_r12.md).  This also matches
-    the 100 TB design: checkpoint the sketch between the signature and
-    verification stages rather than re-scanning the corpus 4x.
-    ``reuse_sets`` (kept for API compat) additionally persists the
-    checkpointed table — redundant now, default off.
+    subtrees (two self-join sides twice).  It is localCheckpointed so
+    the shingle scan + sketch aggregation run ONCE instead of four
+    times, which is the 100 TB design: checkpoint the sketch between
+    the signature and verification stages rather than re-scanning the
+    corpus 4x.  The eager barrier also gives the composed consumers
+    (the agreement/detector/cluster family) a materialized leg they can
+    build concurrently with their other leg (scale.par_build).
     """
     sets = minhash_sketch(docs, text_col, n).localCheckpoint()
-    if reuse_sets:
-        from pyspark import StorageLevel
-        sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
 
     cand = lsh_candidate_pairs(sets)
 
@@ -378,12 +358,10 @@ def prefix_jaccard_pairs(docs: DataFrame, text_col: str = "text", *,
 
 
 def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """32-bit SimHash per doc: each token hash votes +-1 on each bit.
-    The input is fanned out first (see shingle_strings) so the
-    tokenize + per-token md5 cost runs wide on narrow fixture scans."""
+    """32-bit SimHash per doc: each token hash votes +-1 on each bit."""
     tok = (
-        fan_out(docs.select("doc_id", text_col))
-        .select("doc_id", F.explode(ws_tokens(F.col(text_col))).alias("t"))
+        docs.select("doc_id",
+                    F.explode(ws_tokens(F.col(text_col))).alias("t"))
         .select("doc_id", md5_long(F.col("t")).alias("h"))
     )
     votes = tok.groupBy("doc_id").agg(*[
@@ -407,15 +385,11 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", *,
     (pigeonhole), so candidates come from 4 equi-joins, not a cross join.
 
     The fingerprint aggregate feeds both self-join sides; it is
-    localCheckpointed (r12) so the token explode + 32-bit vote
-    aggregation run ONCE.  The r3-era measurement that recompute beat a
-    persist held only while the fingerprint subtree was a single-task
-    scan stage (two serial recomputes filled otherwise-idle cores);
-    with the fanned-out tokenize stage (simhash_fingerprints) the
-    materialization is at parity standalone and lets the composed
-    consumers build this leg concurrently with the MinHash leg
-    (scale.par_build) — and it matches the 100 TB design of
-    checkpointing fingerprints between the sketch and pairing stages."""
+    localCheckpointed so the token explode + 32-bit vote aggregation
+    run ONCE, which matches the 100 TB design of checkpointing
+    fingerprints between the sketch and pairing stages and lets the
+    composed consumers build this leg concurrently with the MinHash leg
+    (scale.par_build)."""
     fps = simhash_fingerprints(docs, text_col).localCheckpoint()
     chunked = fps.select(
         "doc_id", "simhash",
@@ -690,9 +664,8 @@ def segment_dedup(docs: DataFrame, text_col: str = "text", *,
     happens.  If the boilerplate set outgrows broadcast at extreme
     scale, drop the hint and it degrades to an ordinary shuffled left
     join with the same semantics.  The segment explode is recomputed by
-    both passes (recompute-vs-persist measured for the same pattern in
-    :func:`minhash_lsh_pairs` — at 100 TB checkpoint ``corpus_segments``
-    to storage instead).
+    both passes (at 100 TB checkpoint ``corpus_segments`` to storage
+    instead).
     """
     segs = corpus_segments(docs, text_col, seg)
     boiler = (
@@ -811,12 +784,8 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text", *,
     equi-join downstream.  The token and gram-hash arrays are staged
     through named projections (cf. shingle_hashes) so the tokenizer and
     the md5 fold each run once per row, not once per lambda reference.
-    The input is fanned out first (see shingle_strings) — the k-gram
-    hash + window-min HOF chain is the widest per-row pipeline in the
-    registry and must not run as one task on a one-split scan.
     """
-    toked = fan_out(docs.select("doc_id", text_col)) \
-        .select("doc_id", ws_tokens(F.col(text_col)).alias("_toks"))
+    toked = docs.select("doc_id", ws_tokens(F.col(text_col)).alias("_toks"))
     toks = F.col("_toks")
     ghs = F.when(
         F.size(toks) >= k + w - 1,
@@ -961,10 +930,9 @@ def triangle_stats(pairs: DataFrame, *, left_col: str = "doc_a",
 
     The edge list is materialized via localCheckpoint (r12; was a
     persist since r7): the plan references it five times (degrees
-    twice, wedge self-join twice, closure once), and unlike the minhash
-    reuse_sets trade-off (module note at minhash_lsh_pairs) the subtree
-    here is the whole LSH+verify pipeline while the materialization is
-    only dup-graph-sized.  localCheckpoint over persist additionally
+    twice, wedge self-join twice, closure once), and the subtree here
+    is the whole LSH+verify pipeline while the materialization is only
+    dup-graph-sized.  localCheckpoint over persist additionally
     truncates the corpus-scale lineage out of the final plan (smaller
     analysis, no first-action cache race between the five concurrent
     branches).  The ORIENTED relation is also materialized: it feeds

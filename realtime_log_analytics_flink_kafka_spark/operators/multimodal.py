@@ -24,8 +24,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scale import fan_out
-
 #: Synthetic format assignment for fixture rows (documents have no real
 #: blobs; text bytes play the payload).
 FORMATS = ("jpeg", "png", "webp")
@@ -503,7 +501,7 @@ def wav_frame_features(media: DataFrame, *,
             if rows["doc_id"]:
                 yield pd.DataFrame(rows)
 
-    return fan_out(media.select("doc_id", "payload")).mapInPandas(
+    return media.select("doc_id", "payload").mapInPandas(
         _frames, schema=WAV_FRAMES_SCHEMA)
 
 
@@ -898,7 +896,7 @@ def audio_ehash(media: DataFrame, *, decode_stub: bool = True) -> DataFrame:
                     "doc_id": pdf["doc_id"], "fmt": pdf["fmt"],
                     "ehash": pd.array(out, dtype="Int64"),
                 })
-        return fan_out(media.select("doc_id", "fmt", "payload")).mapInPandas(
+        return media.select("doc_id", "fmt", "payload").mapInPandas(
             _hash, schema="doc_id long, fmt string, ehash long")
 
     from ..functions.hashing import md5_long

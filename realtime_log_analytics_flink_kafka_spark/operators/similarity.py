@@ -72,9 +72,7 @@ def _broadcast_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
     pair (join predicate + projection) — measured ~15% of knn_bruteforce
     at sf0.1, and at 100 TB the join condition is the innermost loop.
     The semantics are identical: a pair's cosine is NULL iff either
-    side's norm is zero.  (fan_out measured NEGATIVE here, r12 — the
-    bounded query set keeps the per-row fold small enough that the
-    extra exchange+stages lose; contrast _centroid_ranked.)"""
+    side's norm is zero."""
     c = with_norm(corpus, vec_col).filter(F.col("_norm") > 0).select(
         F.col(id_col).alias("corpus_id"),
         *[F.col(col).alias(f"c_{col}") for col in carry_cols],
@@ -134,15 +132,7 @@ def _dist2(a: Column, b: Column) -> Column:
 def _centroid_ranked(corpus: DataFrame, centroids: DataFrame, *,
                      vec_col: str, id_col: str) -> DataFrame:
     """Every (row, centroid) pair ranked by distance — the shared step of
-    cluster assignment (rank 1) and multiprobe (rank <= n_probe).
-
-    fan_out on the corpus side was tried in r12 and REVERTED in r13
-    after the driver regressed knn_ivf_pq (0.77x) and the re-adjudication
-    A/B confirmed it (6 interleaved pairs: fan_out-on mean 2.03 s vs off
-    1.86 s for knn_ivf_pq; kmeans_refine a wash) — the n x C fold over
-    the bounded embedding fixture is too small to buy back the extra
-    exchange + AQE stages, and at real scale the scan is already wide so
-    fan_out would be a no-op there anyway."""
+    cluster assignment (rank 1) and multiprobe (rank <= n_probe)."""
     cent = centroids.select(
         F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cent_vec"))
     scored = (

@@ -62,13 +62,9 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Zero-token / zero-char / NULL documents get NULL ratio metrics
     (guarded division) instead of raising — under ANSI mode a bare
     ``x / 0`` is a job-killing SparkArithmeticException, and one empty
-    document in a 100 TB corpus must not abort the pass.
-    Fanned out (functions/scale.fan_out): the tokenizer + stopword +
-    regex expressions dominate per row; no-op at real scale."""
-    from ..functions.scale import fan_out
-
+    document in a 100 TB corpus must not abort the pass."""
     e = quality_exprs(text_col)
-    return fan_out(docs).select(
+    return docs.select(
         "doc_id",
         e["n_tokens"].alias("n_tokens"),
         e["avg_token_len"].alias("avg_token_len"),
@@ -160,12 +156,9 @@ def language_pred(scores: dict[str, Column]) -> Column:
 
 def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-vote language ID.  Scores = stopword hits per language;
-    argmax with deterministic tie-break in STOPWORDS insertion order.
-    Fanned out: one tokenizer + |langs| filter passes per row."""
-    from ..functions.scale import fan_out
-
+    argmax with deterministic tie-break in STOPWORDS insertion order."""
     scores = language_scores(text_col)
-    return fan_out(docs).select(
+    return docs.select(
         "doc_id", "lang",
         *[scores[f"score_{lang}"].alias(f"score_{lang}")
           for lang in STOPWORDS],
@@ -176,9 +169,7 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def term_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """doc_id -> (term, tf).  One explode + one aggregation; partial
     aggregation combines map-side so the shuffle carries (doc, term)
-    pairs, not token instances.  (fan_out measured NEGATIVE here, r12:
-    the one-task partial aggregation beats the extra exchange+stages —
-    see OPTIMIZATION_r12.md "fan-out placement".)"""
+    pairs, not token instances."""
     return (
         docs.select("doc_id", F.explode(ws_tokens(F.col(text_col))).alias("term"))
         .groupBy("doc_id", "term")
@@ -270,10 +261,7 @@ def repetition_metrics(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Documents with zero tokens have no grams and are absent.
     """
-    from ..functions.scale import fan_out
-
-    toked = fan_out(docs.select("doc_id", text_col)) \
-        .select("doc_id", ws_tokens(F.col(text_col)).alias("_toks"))
+    toked = docs.select("doc_id", ws_tokens(F.col(text_col)).alias("_toks"))
     toks = F.col("_toks")
 
     def tagged_grams(n: int) -> Column:
@@ -596,10 +584,7 @@ def ngram_spans(docs: DataFrame, n: int, text_col: str = "text") -> DataFrame:
     re-runs an inlined tokenizer on every reference — O(tokens²) regex
     per document.
     """
-    from ..functions.scale import fan_out
-
-    toked = fan_out(docs.select("doc_id", text_col)) \
-        .select("doc_id", ws_tokens(F.col(text_col)).alias("_toks"))
+    toked = docs.select("doc_id", ws_tokens(F.col(text_col)).alias("_toks"))
     toks = F.col("_toks")
     grams = F.when(
         F.size(toks) >= n,
@@ -1243,10 +1228,7 @@ def ngram_diversity(docs: DataFrame, text_col: str = "text") -> DataFrame:
     source with no document of length >= n has no row at that n —
     identical group-dropping in both engines.
     """
-    from ..functions.scale import fan_out
-
-    toked = fan_out(docs.select("source", text_col)) \
-        .select("source", ws_tokens(F.col(text_col)).alias("_toks"))
+    toked = docs.select("source", ws_tokens(F.col(text_col)).alias("_toks"))
     toks = F.col("_toks")
     sep = F.lit(NGRAM_SEP)
 

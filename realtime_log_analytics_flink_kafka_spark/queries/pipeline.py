@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..functions.detmath import det_ln_sql_items, det_round, det_round_sql, \
     exact_round_div, exact_round_div_sql, int_div, with_det_exp, with_det_ln
 from ..functions.hashing import HASH_PRIME, affine_hashes, md5_long
-from ..functions.scale import fan_out, par_build
+from ..functions.scale import par_build
 from ..functions.textnorm import PUNCT_REGEX, WS_REGEX, ascii_lower_sql
 from ..operators import (decontam, dedup, drift, multimodal, packing,
                          sampling, similarity, sketches, text)
@@ -1618,7 +1618,7 @@ def q_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _docs(spark, sf_dir)
     scores = text.language_scores()
-    row = fan_out(docs).select(
+    row = docs.select(
         "doc_id", "source",
         text.quality_exprs()["quality_score_e4"].alias("q_e4"),
         (F.col("lang") == text.language_pred(scores)).alias("lang_ok"),
@@ -2102,7 +2102,7 @@ def q_gate_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     scores = text.language_scores()
     qe4 = text.quality_exprs()["quality_score_e4"]
-    row = fan_out(docs).select(
+    row = docs.select(
         "source",
         F.coalesce(qe4 >= _KAPPA_Q_GATE_E4, F.lit(False))
         .cast("long").alias("ga"),
@@ -2454,14 +2454,18 @@ def q_dup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dup_kcore_sql() -> str:
     from ..operators.dedup import KCORE_KS, KCORE_ROUNDS
+    # Every peel round reads the previous round's node and edge sets
+    # twice; DuckDB inlines an unmarked CTE once per reference, so
+    # without MATERIALIZED the MinHash pairs would be recomputed
+    # exponentially often in the round count.
     ctes, flags, joins = [], [], []
     for k in KCORE_KS:
         prev_e = "ed"
         for r in range(1, KCORE_ROUNDS + 1):
-            ctes.append(f"""n{k}_{r} AS (
+            ctes.append(f"""n{k}_{r} AS MATERIALIZED (
     SELECT u FROM {prev_e} GROUP BY u HAVING count(*) >= {k}
 )""")
-            ctes.append(f"""e{k}_{r} AS (
+            ctes.append(f"""e{k}_{r} AS MATERIALIZED (
     SELECT e.u AS u, e.v AS v
     FROM {prev_e} e
     JOIN n{k}_{r} a ON e.u = a.u
@@ -2479,8 +2483,8 @@ def _dup_kcore_sql() -> str:
             f"LEFT JOIN (SELECT u, TRUE AS f FROM n{k}_{prev}) p{k}"
             f" ON d.u = p{k}.u")
     return f"""
-WITH pairs AS ({_minhash_sql()}),
-ed AS (
+WITH pairs AS MATERIALIZED ({_minhash_sql()}),
+ed AS MATERIALIZED (
     SELECT doc_a AS u, doc_b AS v FROM pairs
     UNION ALL
     SELECT doc_b AS u, doc_a AS v FROM pairs
@@ -2705,8 +2709,7 @@ def q_signal_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     ent = text.token_entropy(docs)
     e = text.quality_exprs()
-    q = fan_out(docs).select("doc_id", "source",
-                             e["quality_score_e4"].alias("q_e4"))
+    q = docs.select("doc_id", "source", e["quality_score_e4"].alias("q_e4"))
     j = (
         ent.join(q, "doc_id")
         .filter(F.col("q_e4").isNotNull())
@@ -2842,8 +2845,7 @@ def q_spearman_signal_correlations(spark: SparkSession,
     docs = _docs(spark, sf_dir)
     ent = text.token_entropy(docs)
     e = text.quality_exprs()
-    q = fan_out(docs).select("doc_id", "source",
-                             e["quality_score_e4"].alias("q_e4"))
+    q = docs.select("doc_id", "source", e["quality_score_e4"].alias("q_e4"))
     j = (
         ent.join(q, "doc_id")
         .filter(F.col("q_e4").isNotNull())
@@ -3560,7 +3562,7 @@ def q_token_budget_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     e = text.quality_exprs()
-    base = fan_out(docs).select(
+    base = docs.select(
         "doc_id", "source",
         e["n_tokens"].alias("n_tokens"),
         F.coalesce(e["quality_score_e4"], F.lit(-1)).cast("long")
@@ -4241,7 +4243,7 @@ def q_cluster_best_representative(spark: SparkSession, sf_dir: str) -> DataFrame
     pairs = dedup.minhash_lsh_pairs(docs, threshold=MINHASH_THRESHOLD)
     comp = dedup.duplicate_components(pairs)
     e = text.quality_exprs()
-    q = fan_out(docs).select(
+    q = docs.select(
         "doc_id",
         F.coalesce(e["quality_score_e4"], F.lit(-1)).cast("long")
             .alias("q_e4"))
@@ -4397,7 +4399,7 @@ def q_quality_vs_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = text.unigram_surprisal(docs).select("doc_id", "mean_surprisal")
     e = text.quality_exprs()
     base = (
-        fan_out(docs).select(
+        docs.select(
             "doc_id", "lang",
             F.coalesce(e["quality_score_e4"], F.lit(-1)).cast("long")
                 .alias("q_e4"))
@@ -4937,7 +4939,7 @@ def q_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = text.quality_exprs()
     toks = text.ws_tokens(F.col("text"))
     all_stops = [w for ws in text.STOPWORDS.values() for w in ws]
-    row_flags = fan_out(docs).select(
+    row_flags = docs.select(
         "doc_id",
         ((q["n_tokens"] >= FUNNEL_MIN_TOKENS)
          & (q["n_tokens"] <= FUNNEL_MAX_TOKENS)).alias("f_len"),

@@ -186,7 +186,10 @@ def test_no_unbounded_nested_loop_joins(spark):
     """No registry query may plan a CartesianProduct or an unsanctioned
     BroadcastNestedLoopJoin — the O(n^2) shapes that are correct on
     fixtures and unusable at 100 TB.  Auto-broadcast is disabled so small
-    fixtures can't mask a theta-join as a harmless broadcast."""
+    fixtures can't mask a theta-join as a harmless broadcast.
+
+    The same pass bans RoundRobinPartitioning: scan parallelism comes
+    from the input's splits, so no operator repartitions its input."""
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     offenders = {}
     # cold plans: a persisted intermediate from an earlier test would
@@ -204,11 +207,13 @@ def test_no_unbounded_nested_loop_joins(spark):
             df = spec.fn(spark, SF_SMOKE)
             bnlj = node_count(df, "BroadcastNestedLoopJoin")
             cart = node_count(df, "CartesianProduct")
-            if cart or bnlj > NESTED_LOOP_SANCTIONED.get(name, 0):
-                offenders[name] = {"bnlj": bnlj, "cartesian": cart}
+            rr = formatted_plan(df).count("RoundRobinPartitioning")
+            if cart or rr or bnlj > NESTED_LOOP_SANCTIONED.get(name, 0):
+                offenders[name] = {"bnlj": bnlj, "cartesian": cart,
+                                   "round_robin": rr}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert not offenders, f"unsanctioned nested-loop joins: {offenders}"
+    assert not offenders, f"unsanctioned plan shapes: {offenders}"
 
 
 def test_r11_banded_joins_are_equi(spark):
